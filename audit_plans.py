@@ -780,11 +780,10 @@ def audited_plan(spark, name: str, sf_dir: str) -> str:
     aggregate) are appended, so the audit sees the HashAggregate that
     actually computed the answer."""
     import feast_hive_spark.registry as registry_mod
-    from feast_hive_spark.plans import memo, pit
+    from feast_hive_spark.plans import memo
 
     registry_mod.clear_prepared()
     memo.clear()
-    pit._PLAN_CACHE.clear()
     captured: dict[str, list[str]] = {}
     memo.capture_buildtime_plans(captured)
     try:

@@ -380,7 +380,7 @@ def _time_e2e(spark, name: str, sf_dir: str, runs: "int | None" = None) -> float
     pit_multi_feature_view exponent ambiguous)."""
     from feast_hive_spark import ckpt
     from feast_hive_spark import registry as registry_mod
-    from feast_hive_spark.plans import memo, pit
+    from feast_hive_spark.plans import memo
 
     if runs is None:
         runs = int(os.environ.get("SPARK_GRAFT_SCALE_RUNS", "3"))
@@ -392,7 +392,6 @@ def _time_e2e(spark, name: str, sf_dir: str, runs: "int | None" = None) -> float
         # the FULL build+execute cost at both scales
         registry_mod.clear_prepared()
         memo.clear()
-        pit._PLAN_CACHE.clear()
         # checkpoint blocks accumulate per rebuild cycle otherwise
         # (invisible to clearCache; safe after the cache drops above)
         ckpt.release(spark)

@@ -11,13 +11,15 @@ storage until the JVM happens to GC the RDD handle and the
 ContextCleaner notices (the r8/r9 slow-leak findings).
 
 ``track(df)`` records the frame; ``release(spark)`` frees every
-tracked frame of the CURRENT application. CRITICAL ordering contract:
-a localCheckpoint TRUNCATES lineage, so a released frame cannot be
-recomputed — call ``release`` only after dropping every cache that
-could hand the frame back (``registry.clear_prepared()``,
-``plans.memo.clear()``, ``plans.pit._PLAN_CACHE``), exactly the
-hygiene order bench.py runs between queries. Entries from other
-(stopped) applications are pruned on insert, mirroring plans/memo.py.
+tracked frame of the CURRENT application. It is APP-scoped, not
+session-scoped: it also frees the frames of every ``newSession()``
+sibling, while the memo keys entries per session. CRITICAL ordering
+contract: a localCheckpoint TRUNCATES lineage, so a released frame
+cannot be recomputed — call ``release`` only after dropping every
+cache that could hand the frame back (``registry.clear_prepared()``,
+then ``plans.memo.clear()``, which drops every session's entries),
+exactly the hygiene order bench.py runs between queries. Entries
+from other (stopped) applications are pruned on insert.
 """
 
 from __future__ import annotations

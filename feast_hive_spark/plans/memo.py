@@ -9,8 +9,9 @@ inputs re-runs every one of those jobs to produce byte-identical
 results (each is a pure function of the input plan — the r5 verdict's
 "prepare is per-retrieval cost in real use" finding).
 
-This module generalizes the PIT bounds memo: results are keyed by the
-EXACT canonicalized analyzed plan of every input DataFrame
+This module is the one reuse layer for such work, PIT's bounds job
+and prepared plan included: results are keyed by the EXACT
+canonicalized analyzed plan of every input DataFrame
 (``sameResult`` — the identity check Spark's own CacheManager trusts
 for cache substitution, so LocalRelation data participates in the
 comparison) plus the concrete input-file listing (``inputFiles`` —
@@ -273,6 +274,14 @@ def plan_memo(
     if isinstance(inputs, DataFrame):
         inputs = [inputs]
     return _lookup_or_run(spark, "plan", inputs, token, build)
+
+
+def forget(value: Any) -> None:
+    """Drop every entry whose memoized value IS ``value`` (identity):
+    its owner released what the value depends on, e.g. the pinned
+    caches of a prepared PIT plan."""
+    with _LOCK:
+        _MEMO[:] = [e for e in _MEMO if e[5] is not value]
 
 
 def clear() -> None:

@@ -28,10 +28,7 @@ Spark-first plan (SURVEY §2.3 J1-J6, §4):
    struct(event_ts, created_ts, tiebreaks))`` grouped by
    ``(keys…, entity_ts)``. Partial aggregation runs MAP-SIDE, so a
    whale entity key collapses to one row per partition before the
-   shuffle — skew-immune at 100 TB (a row_number window, even with
-   WindowGroupLimit's streaming top-1, still funnels every matching
-   row of a hot key through one shuffle partition; it remains
-   available via ``use_max_by=False``). We join on the raw
+   shuffle — skew-immune at 100 TB. We join on the raw
    ``(keys…, entity_ts)`` tuple, NOT the collision-prone
    separator-less string rid of hive.py:537-544.
 5. **Broadcast the (deduped) entity side** when small: the feature
@@ -43,7 +40,14 @@ Spark-first plan (SURVEY §2.3 J1-J6, §4):
 Physical plan per feature view: Scan(feature, pushed time filter) ->
 BroadcastHashJoin(entity keys) + range condition ->
 partial_max_by -> Exchange -> max_by -> broadcast left-join assembly.
-Exactly one shuffle per fv, with map-side combine.
+Exactly one shuffle per fv, with map-side combine. The whole
+retrieval is ONE ``spark.sql`` statement (``_join_fvs_sql``).
+
+Reuse goes through ``plans/memo.py`` only: the bounds job is a
+``job_memo`` and the prepared plan a ``plan_memo``, both keyed by
+session, analyzed plans and input-file listing. A reused plan keeps
+its compiled physical plan, so after toggling optimizer confs call
+``memo.clear()`` to re-plan an identical retrieval.
 """
 
 from __future__ import annotations
@@ -55,10 +59,11 @@ from datetime import timedelta
 from typing import Mapping, Optional, Sequence, Union
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from feast_hive_spark.plans import memo
 from feast_hive_spark.retrieval import RetrievalJob
 from feast_hive_spark.sources.tables import bind_sql_view
 from feast_hive_spark.sources.source import DataSource
@@ -232,17 +237,6 @@ def _validate_entity_df(
         raise EntityDFMissingColumnsError(sorted(expected), missing)
 
 
-# (app_id, analyzed-plan JVM object, bounds Row) — newest last
-_BOUNDS_CACHE: list = []
-_BOUNDS_CACHE_MAX = 8
-
-# Prepared-retrieval plan cache: (app_id, flags tuple, fv structural
-# fingerprints, [entity + per-fv-source analyzed plans], built
-# DataFrame, pinned caches) — newest last. See get_historical_features.
-_PLAN_CACHE: list = []
-_PLAN_CACHE_MAX = 8
-
-
 def _fv_fingerprint(fv: FeatureView) -> tuple:
     return (
         fv.name,
@@ -254,40 +248,18 @@ def _fv_fingerprint(fv: FeatureView) -> tuple:
     )
 
 
-def _plan_cache_lookup(app_id: str, flags: tuple, fps: tuple, plans: list):
-    for aid, cflags, cfps, cplans, df, pinned in reversed(_PLAN_CACHE):
-        if (
-            aid == app_id
-            and cflags == flags
-            and cfps == fps
-            and all(c.sameResult(p) for c, p in zip(cplans, plans))
-        ):
-            return df, pinned
-    return None
-
-
 class _EvictOnClose:
     """Rides a RetrievalJob's pinned list: ``close()`` calls
     ``unpersist()`` on every pinned entry, and this one drops the
-    prepared-plan cache entry whose caches were just released (a later
+    memoized prepared plan whose caches were just released (a later
     identical retrieval then rebuilds and re-pins instead of returning
     a plan whose caches are gone)."""
 
-    def __init__(self, df) -> None:
-        self._df = df
+    def __init__(self, value) -> None:
+        self._value = value
 
     def unpersist(self) -> None:
-        _PLAN_CACHE[:] = [e for e in _PLAN_CACHE if e[4] is not self._df]
-
-
-def _plan_cache_store(
-    app_id: str, flags: tuple, fps: tuple, plans: list, df, pinned: list
-) -> None:
-    pinned.append(_EvictOnClose(df))
-    _PLAN_CACHE[:] = [e for e in _PLAN_CACHE if e[0] == app_id][
-        -(_PLAN_CACHE_MAX - 1):
-    ]
-    _PLAN_CACHE.append((app_id, flags, fps, plans, df, list(pinned)))
+        memo.forget(self._value)
 
 
 def _entity_bounds(spark: SparkSession, sdf: DataFrame, entity_ts_col: str):
@@ -296,31 +268,21 @@ def _entity_bounds(spark: SparkSession, sdf: DataFrame, entity_ts_col: str):
     semantically-identical entity frame within a session.
 
     A warm retrieval loop re-submits the same entity batch (bench r6:
-    the bounds job was ~0.15 s of every PIT rebuild's prepare); the
-    memo recognizes it by EXACT canonicalized-plan equality —
-    ``analyzed().sameResult(...)``, the identical mechanism Spark's
-    own CacheManager trusts for cache substitution, so there is no
-    hash-collision risk and LocalRelation data is part of the
-    comparison. Bounded LRU of 8 plans; entries from other
-    applications are dropped. Like ``spark.catalog.cacheTable``, the
-    memo assumes sources are immutable within a session — mutating a
-    table mid-session invalidates caches and this memo alike."""
+    the bounds job was ~0.15 s of every PIT rebuild's prepare);
+    ``memo.job_memo`` recognizes it by the pruned probe's exact
+    analyzed plan plus its input-file listing, so an overwritten
+    entity parquet re-runs the job."""
     probe = sdf.select(F.col(entity_ts_col).alias(_ENTITY_TS))
-    app_id = spark.sparkContext.applicationId
-    plan = probe._jdf.queryExecution().analyzed()
-    for aid, cached_plan, row in reversed(_BOUNDS_CACHE):
-        if aid == app_id and cached_plan.sameResult(plan):
-            return row
-    row = probe.agg(
-        F.min(_ENTITY_TS).alias("mn"),
-        F.max(_ENTITY_TS).alias("mx"),
-        F.count(F.lit(1)).alias("cnt"),
-    ).first()
-    _BOUNDS_CACHE[:] = [e for e in _BOUNDS_CACHE if e[0] == app_id][
-        -(_BOUNDS_CACHE_MAX - 1):
-    ]
-    _BOUNDS_CACHE.append((app_id, plan, row))
-    return row
+    return memo.job_memo(
+        spark,
+        probe,
+        ("pit.bounds",),
+        lambda: probe.agg(
+            F.min(_ENTITY_TS).alias("mn"),
+            F.max(_ENTITY_TS).alias("mx"),
+            F.count(F.lit(1)).alias("cnt"),
+        ).first(),
+    )
 
 
 def _estimated_bytes(df: DataFrame) -> int:
@@ -340,17 +302,15 @@ def get_historical_features(
     entity_event_timestamp_col: Optional[str] = None,
     broadcast_entities: "bool | str" = "auto",
     tiebreak_columns: Sequence[str] = (),
-    use_max_by: bool = True,
     on_demand_transforms=None,
     broadcast_threshold_rows: int = 1_000_000,
-    plan_cache: bool = True,
     shuffle_small_features_bytes: int = 64 << 20,
 ) -> RetrievalJob:
     """Build the lazy multi-feature-view PIT retrieval job
     (reference entry point 1, hive.py:192-269).
 
     ``tiebreak_columns``: extra descending-order columns applied after
-    (event_ts, created_ts) in each feature view's window, making row
+    (event_ts, created_ts) in each feature view's argmax, making row
     choice deterministic under full timestamp ties (the reference fans
     tied rows out through an inner join, hive.py:685-696 — a bug-shaped
     behavior we deliberately do not reproduce; see SURVEY §7 risks).
@@ -391,54 +351,14 @@ def get_historical_features(
     # long-lived session can return storage memory to baseline
     pinned: list[DataFrame] = []
 
-    def build() -> DataFrame:
-        # Prepared-retrieval cache (the plan-level analogue of a
-        # prepared statement): a warm serving loop re-issues the same
-        # retrieval shape against the same sources, and the JVM-side
-        # analysis of the multi-join plan (~0.15 s/build measured at
-        # r6) is pure repeated work. Key = structural fv spec + flags
-        # + EXACT canonicalized-plan equality (``sameResult``) of the
-        # entity df and every fv source — the same mechanism and the
-        # same immutable-sources-within-a-session assumption as
-        # ``spark.catalog.cacheTable``. ``RetrievalJob.close()``
-        # evicts the entry alongside unpersisting its pinned caches.
-        # Caveat (shared with every cached Dataset): the returned
-        # plan's PHYSICAL compilation is frozen, so session-conf
-        # changes between identical retrievals don't re-plan it —
-        # pass ``plan_cache=False`` when toggling optimizer confs.
-        app_id = spark.sparkContext.applicationId
-        flags = (
-            bool(full_feature_names),
-            broadcast_entities
-            if isinstance(broadcast_entities, str)
-            else bool(broadcast_entities),
-            tuple(tiebreak_columns),
-            bool(use_max_by),
-            int(broadcast_threshold_rows),
-            int(shuffle_small_features_bytes),
-        )
-        fps = tuple(_fv_fingerprint(fv) for fv in feature_views)
-        plans = [sdf._jdf.queryExecution().analyzed()]
-        for fv in feature_views:
-            plans.append(
-                fv.resolve_df(spark)._jdf.queryExecution().analyzed()
-            )
-        hit = (
-            _plan_cache_lookup(app_id, flags, fps, plans)
-            if plan_cache
-            else None
-        )
-        if hit is not None:
-            df, cached_pinned = hit
-            pinned.extend(cached_pinned)
-            return df
-
+    def prepare(sources: list) -> tuple:
+        pins: list = []
         ent = sdf.withColumn(_ENTITY_TS, F.col(entity_ts_col))
         # Entity df is read >= 3x (bounds, per-fv join sides, final
         # assembly) — cache it (replaces the reference's in-memory temp
         # table, hive.py:532/:253).
         ent = ent.cache()
-        pinned.append(ent)
+        pins.append(ent)
 
         # J2 kept manual: one tiny job for global bounds -> literal
         # pushdown filters on every feature scan.  The broadcast-guard
@@ -454,9 +374,9 @@ def get_historical_features(
         bounds = _entity_bounds(spark, sdf, entity_ts_col)
         parts = [
             _prepare_fv(
-                fv, spark, bounds, full_feature_names, tiebreak_columns
+                fv, src, idx, bounds, full_feature_names, tiebreak_columns
             )
-            for fv in feature_views
+            for idx, (fv, src) in enumerate(zip(feature_views, sources))
         ]
         if broadcast_entities == "auto":
             do_broadcast = bounds["cnt"] <= broadcast_threshold_rows
@@ -476,7 +396,6 @@ def get_historical_features(
                     pass  # stats unavailable: keep the broadcast path
         else:
             do_broadcast = bool(broadcast_entities)
-        result = ent
 
         # A1 hoisted: build the deduped entity-key side ONCE per
         # distinct join-key tuple. Catalyst's exchange reuse does not
@@ -485,73 +404,59 @@ def get_historical_features(
         # multi-view retrieval re-runs the same dedup shuffle +
         # broadcast build per view; a shared cached DataFrame makes
         # the second and later views read the materialized keys.
-        tuples: dict[tuple, int] = {}
-        for fv in feature_views:
-            t = tuple(fv.key_map().values())
-            tuples[t] = tuples.get(t, 0) + 1
         ekeys_by_tuple: dict[tuple, DataFrame] = {}
-        for t, uses in tuples.items():
-            ek = ent.select(*t, _ENTITY_TS).dropDuplicates()
-            # cache even single-use key sets (r6): the deduped keys are
-            # read once per EXECUTION, and without the cache every
-            # re-execution of the retrieval replays the dedup exchange
-            # + broadcast build. Bounded by the deduped entity-key
-            # count (the broadcast guard's own bound) and released by
-            # RetrievalJob.close() like every plan-pinned cache.
-            ek = ek.cache()
-            pinned.append(ek)
-            ekeys_by_tuple[t] = ek
+        for part in parts:
+            t = tuple(part.entity_cols)
+            if t not in ekeys_by_tuple:
+                # cache even single-use key sets (r6): the deduped keys
+                # are read once per EXECUTION, and without the cache
+                # every re-execution of the retrieval replays the dedup
+                # exchange + broadcast build. Bounded by the deduped
+                # entity-key count (the broadcast guard's own bound) and
+                # released by RetrievalJob.close() like every
+                # plan-pinned cache.
+                ek = ent.select(*t, _ENTITY_TS).dropDuplicates().cache()
+                pins.append(ek)
+                ekeys_by_tuple[t] = ek
 
-        # SQL-path eligibility (r10, ADVICE r9#3): the one-statement
-        # assembly references accumulated columns as qualified
-        # ``a.`col``` at every nesting level, so any duplicate in the
-        # would-be output (two views emitting the same feature name
-        # under full_feature_names=False, or a feature shadowing an
-        # entity column) fails analysis with AMBIGUOUS_REFERENCE at
-        # the NEXT level. The DataFrame chain carries duplicate
-        # columns through silently (positional resolution), matching
-        # the pre-r9 behavior — route collisions there.
-        all_out = [n for p in parts for n in p.out_names]
-        final_cols = list(ent.columns) + all_out
-        sql_safe = len(final_cols) == len(set(final_cols))
-        if use_max_by and parts and all(p.fast for p in parts) and sql_safe:
-            # All views take the default keyed-max_by shape: assemble
-            # the WHOLE retrieval as one spark.sql statement (one
-            # parse + one analysis pass; the per-view loop below pays
-            # both per view).
-            result = _join_fvs_sql(
-                spark,
-                ent,
-                parts,
-                [
-                    ekeys_by_tuple[tuple(fv.key_map().values())]
-                    for fv in feature_views
-                ],
-                do_broadcast,
-            )
-        else:
-            for fv, part in zip(feature_views, parts):
-                result = _join_feature_view(
-                    result,
-                    ent,
-                    fv,
-                    spark,
-                    bounds,
-                    full_feature_names,
-                    do_broadcast,
-                    tiebreak_columns,
-                    use_max_by,
-                    ekeys=ekeys_by_tuple[tuple(fv.key_map().values())],
-                    part=part,
-                    force_chain=not sql_safe,
-                )
-        # P4: drop internal columns (the reference's regex column
-        # exclusion, hive.py:706) — everything else (incl. passthrough
-        # entity columns) survives.
-        result = result.drop(_ENTITY_TS)
-        if plan_cache:
-            _plan_cache_store(app_id, flags, fps, plans, result, pinned)
-        return result
+        result = _join_fvs_sql(
+            spark,
+            ent,
+            parts,
+            [ekeys_by_tuple[tuple(p.entity_cols)] for p in parts],
+            do_broadcast,
+        )
+        value = (result, pins)
+        pins.append(_EvictOnClose(value))
+        return value
+
+    def build() -> DataFrame:
+        # Prepared-retrieval reuse (the plan-level analogue of a
+        # prepared statement): a warm serving loop re-issues the same
+        # retrieval shape against the same sources, and the JVM-side
+        # analysis of the multi-join plan (~0.15 s/build measured at
+        # r6) is pure repeated work. ``memo.plan_memo`` keys it by
+        # session, structural fv spec + flags, the exact analyzed plans
+        # of the entity df and every fv source, and their input files.
+        # ``RetrievalJob.close()`` evicts the entry alongside
+        # unpersisting its pinned caches.
+        sources = [fv.resolve_df(spark) for fv in feature_views]
+        token = (
+            "pit.plan",
+            bool(full_feature_names),
+            broadcast_entities
+            if isinstance(broadcast_entities, str)
+            else bool(broadcast_entities),
+            tuple(tiebreak_columns),
+            int(broadcast_threshold_rows),
+            int(shuffle_small_features_bytes),
+            tuple(_fv_fingerprint(fv) for fv in feature_views),
+        )
+        df, pins = memo.plan_memo(
+            spark, [sdf, *sources], token, lambda: prepare(sources)
+        )
+        pinned.extend(pins)
+        return df
 
     return RetrievalJob(
         build, on_demand_transforms=on_demand_transforms, pinned=pinned
@@ -561,36 +466,37 @@ def get_historical_features(
 @dataclass
 class _FvPart:
     """Per-feature-view prepared inputs for the join step: the
-    projected+bounds-filtered feature frame plus the SQL fragments the
-    fast path assembles. ``fast`` marks default-shape eligibility
-    (keyed fv with features under the max_by strategy)."""
+    projected+bounds-filtered feature frame plus the SQL fragments
+    ``_join_fvs_sql`` assembles. Features travel under internal
+    ``aliases`` and take their ``out_names`` only in the final
+    SELECT, so colliding output names never meet inside the
+    statement."""
 
     feat: DataFrame
     entity_cols: list
+    aliases: list
     out_names: list
     created_ts: Optional[str]
     tiebreaks: list
     range_cond: str
-    fast: bool
 
 
 def _prepare_fv(
     fv: FeatureView,
-    spark: SparkSession,
+    feat: DataFrame,
+    idx: int,
     bounds,
     full_feature_names: bool,
     tiebreak_columns: Sequence[str],
 ) -> _FvPart:
     key_map = fv.key_map()  # feature col -> entity col
-    entity_cols = list(key_map.values())
     event_ts = fv.event_ts_col()
     created_ts = fv.created_ts_col()
 
-    feat = fv.resolve_df(spark)
     # Subquery projection (hive.py:584-591): event/created ts under
     # internal names, join keys renamed to entity-side names, features
-    # under their output names. Pure projection — column pruning
-    # reaches the scan. ONE selectExpr call: plan CONSTRUCTION here is
+    # under internal aliases. Pure projection — column pruning reaches
+    # the scan. ONE selectExpr call: plan CONSTRUCTION here is
     # dominated by py4j round-trips (~0.4 ms each; a Column-API
     # projection costs one per col/alias, ~190 per feature view
     # profiled at r6), and a warm retrieval loop pays it per call.
@@ -599,12 +505,11 @@ def _prepare_fv(
         sel.append(f"{_bt(created_ts)} AS {_CREATED_TS}")
     for fcol, ecol in key_map.items():
         sel.append(f"{_bt(fcol)} AS {_bt(ecol)}")
-    out_names = []
-    for feat_name in fv.features:
-        out = fv.output_name(feat_name, full_feature_names)
-        out_names.append(out)
-        sel.append(f"{_bt(feat_name)} AS {_bt(out)}")
-    sel.extend(_bt(c) for c in tiebreak_columns if c in feat.columns)
+    aliases = [f"__f{idx}_{j}" for j in range(len(fv.features))]
+    for feat_name, alias in zip(fv.features, aliases):
+        sel.append(f"{_bt(feat_name)} AS {alias}")
+    tiebreaks = [c for c in tiebreak_columns if c in feat.columns]
+    sel.extend(_bt(c) for c in tiebreaks)
     feat = feat.selectExpr(*sel)
 
     # J2: literal coarse bounds — ttl==0 -> upper bound only
@@ -634,128 +539,15 @@ def _prepare_fv(
 
     return _FvPart(
         feat=feat,
-        entity_cols=entity_cols,
-        out_names=out_names,
+        entity_cols=list(key_map.values()),
+        aliases=aliases,
+        out_names=[
+            fv.output_name(f, full_feature_names) for f in fv.features
+        ],
         created_ts=created_ts,
-        tiebreaks=[c for c in tiebreak_columns if c in feat.columns],
+        tiebreaks=tiebreaks,
         range_cond=range_cond,
-        fast=bool(entity_cols and out_names),
     )
-
-
-def _join_feature_view(
-    acc: DataFrame,
-    ent: DataFrame,
-    fv: FeatureView,
-    spark: SparkSession,
-    bounds,
-    full_feature_names: bool,
-    broadcast_entities: bool,
-    tiebreak_columns: Sequence[str],
-    use_max_by: bool = True,
-    ekeys: Optional[DataFrame] = None,
-    part: Optional[_FvPart] = None,
-    force_chain: bool = False,
-) -> DataFrame:
-    if part is None:
-        part = _prepare_fv(
-            fv, spark, bounds, full_feature_names, tiebreak_columns
-        )
-    feat = part.feat
-    entity_cols = part.entity_cols
-    out_names = part.out_names
-    created_ts = part.created_ts
-    range_cond = part.range_cond
-
-    # A1: dedup entity join side (shared across views via the caller's
-    # per-key-tuple cache; rebuilt here only for direct callers).
-    if ekeys is None:
-        ekeys = ent.select(*entity_cols, _ENTITY_TS).dropDuplicates()
-
-    if use_max_by and part.fast and not force_chain:
-        # Fast path for the default shape (keyed fv with features,
-        # max_by strategy): J3+J4/J5+J6 as ONE ``spark.sql`` statement.
-        # The step-by-step chain below costs ~6 eagerly-analyzed
-        # Dataset creations per feature view (~60 ms/view of py4j +
-        # repeated analysis, profiled at r8); the parsed text is one
-        # round trip + one analysis pass and produces the identical
-        # logical plan (broadcast hints stand in for the F.broadcast
-        # wrappers; the stable temp views keep the cached ekeys/entity
-        # plans, so cache reuse is unchanged).
-        return _join_fvs_sql(
-            spark, acc, [part], [ekeys], broadcast_entities
-        )
-
-    if broadcast_entities:
-        ekeys = F.broadcast(ekeys)
-
-    # J3: equi join on keys (entity-less fv -> cross of the deduped
-    # timestamps, matching the rid=cast(entity_ts) semantics of
-    # hive.py:543-544) + range predicate.
-    if entity_cols:
-        joined = feat.join(ekeys, on=entity_cols, how="inner")
-    else:
-        joined = feat.crossJoin(ekeys)
-    joined = joined.filter(range_cond)
-
-    # W1 replaces J4/J5/A3/A4. Two equivalent physical strategies:
-    #
-    # max_by (default): argmax of the feature struct over the
-    # (event_ts, created_ts, tiebreaks) ordering key as a hash
-    # aggregate. Partial aggregation runs map-side, so a whale entity
-    # key (one key matching millions of feature rows) reduces to one
-    # row per partition BEFORE the shuffle — skew-immune at 100 TB.
-    #
-    # row_number window: same result; Spark's WindowGroupLimit rewrite
-    # inserts a partial top-1 BEFORE the shuffle too (load-verified in
-    # test_pit_skew.py), so on this engine version both strategies are
-    # skew-immune; on engines without the rewrite the window path ships
-    # every hot-key row through one shuffle partition (the negative-
-    # control test demonstrates it by disabling the rewrite). Kept
-    # selectable for comparison/debugging.
-    # ordering keys as micros longs, not raw timestamps: the max_by /
-    # row_number comparator runs per joined row, and long compares
-    # codegen tighter than timestamp ones (measured on the flagship
-    # bench query); unix_micros is a monotone transform, so the argmax
-    # and NULL placement are unchanged
-    ord_sql = [f"unix_micros({_EVENT_TS})"]
-    if created_ts:
-        ord_sql.append(f"unix_micros({_CREATED_TS})")
-    ord_sql.extend(_bt(c) for c in tiebreak_columns if c in joined.columns)
-    ord_key = "struct(" + ", ".join(ord_sql) + ")"
-    if use_max_by:
-        if out_names:
-            payload = "struct(" + ", ".join(_bt(n) for n in out_names) + ")"
-            agg = F.expr(f"max_by({payload}, {ord_key})").alias("__best")
-        else:
-            agg = F.expr("count(1)").alias("__n")
-        latest = joined.groupBy(*entity_cols, _ENTITY_TS).agg(agg)
-        if out_names:
-            latest = latest.selectExpr(
-                *[_bt(c) for c in entity_cols],
-                _ENTITY_TS,
-                *[f"__best.{_bt(n)} AS {_bt(n)}" for n in out_names],
-            )
-        else:
-            latest = latest.select(*entity_cols, _ENTITY_TS)
-    else:
-        w = Window.partitionBy(*entity_cols, _ENTITY_TS).orderBy(
-            *[F.expr(c).desc() for c in ord_sql]
-        )
-        latest = (
-            joined.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(*entity_cols, _ENTITY_TS, *out_names)
-        )
-
-    # J6: left join assembly on the raw key tuple; NULL features for
-    # unmatched entity rows, duplicate entity rows preserved. The fv
-    # result is bounded by the deduped entity-key count, so when the
-    # entity side is broadcastable the assembly side is too — skipping
-    # the sort-merge exchange on the (possibly large) entity df.
-    if broadcast_entities:
-        latest = F.broadcast(latest)
-    return acc.join(latest, on=[*entity_cols, _ENTITY_TS], how="left")
 
 
 def _join_fvs_sql(
@@ -765,18 +557,26 @@ def _join_fvs_sql(
     ekeys_list: Sequence[DataFrame],
     broadcast_entities: bool,
 ) -> DataFrame:
-    """J3+W1+J6 for one or more default-shape (keyed max_by) feature
-    views, assembled as ONE ``spark.sql`` statement — the per-level
-    subquery nests where the step-by-step chain accumulated
-    DataFrames, so an n-view retrieval pays ONE parse + ONE analysis
-    pass instead of n (r9: pit_multi_feature_view cold build −1 sql
-    −2 temp views vs the r8 per-view statements). Semantically
-    identical to the chain: same equi join on the deduped entity
-    keys, same range predicate, same ``max_by(struct(features),
-    struct(ordering))`` argmax, same USING-style left assembly with
-    join keys leading the schema at every level — the old
-    ``acc.join(latest, on=[...])`` also emitted
-    ``[keys, _ENTITY_TS, acc-rest, features]``.
+    """J3+W1+J6 for every feature view, assembled as ONE ``spark.sql``
+    statement — one subquery level per view, so an n-view retrieval
+    pays ONE parse + ONE analysis pass (r9: pit_multi_feature_view
+    cold build −1 sql −2 temp views vs per-view statements). Per
+    level: equi join on the deduped entity keys (``CROSS JOIN`` on the
+    deduped timestamps for an entity-less view, the rid=cast(entity_ts)
+    semantics of hive.py:543-544), the range predicate, the
+    ``max_by(struct(features), struct(ordering))`` argmax grouped by
+    ``(keys…, entity_ts)`` (a view without features groups only), and
+    a USING left join that emits ``[keys, _ENTITY_TS, acc-rest,
+    features]``. Features carry internal aliases through every level;
+    the outer SELECT renames them and drops ``_ENTITY_TS``, so two
+    views emitting one output name (or a feature shadowing an entity
+    column) come out as duplicate columns in view order.
+
+    Ordering keys are micros longs, not raw timestamps: the max_by
+    comparator runs per joined row, and long compares codegen tighter
+    than timestamp ones (measured on the flagship bench query);
+    unix_micros is a monotone transform, so the argmax and NULL
+    placement are unchanged.
 
     Manual reused view names instead of spark.sql's {df} placeholders,
     for two measured reasons: the placeholder formatter creates AND
@@ -811,53 +611,63 @@ def _join_fvs_sql(
             if ekv is None:
                 ekv = bind_sql_view(ekeys, f"__pit_sql_ek{len(ek_views)}")
                 ek_views[id(ekeys)] = ekv
-            keys_sql = ", ".join(_bt(c) for c in part.entity_cols)
-            ord_sql = [f"unix_micros({_EVENT_TS})"]
-            if part.created_ts:
-                ord_sql.append(f"unix_micros({_CREATED_TS})")
-            ord_sql.extend(_bt(c) for c in part.tiebreaks)
-            ord_key = "struct(" + ", ".join(ord_sql) + ")"
-            payload = (
-                "struct(" + ", ".join(_bt(n) for n in part.out_names) + ")"
+            keys = [_bt(c) for c in part.entity_cols]
+            group = ", ".join([*keys, _ENTITY_TS])
+            ek_join = (
+                f"JOIN {ekv} ek USING ({', '.join(keys)})"
+                if keys
+                else f"CROSS JOIN {ekv} ek"
             )
-            best = ", ".join(
-                f"__best.{_bt(n)} AS {_bt(n)}" for n in part.out_names
-            )
-            feats = ", ".join(f"latest.{_bt(n)}" for n in part.out_names)
+            best = []
+            if part.aliases:
+                ord_sql = [f"unix_micros({_EVENT_TS})"]
+                if part.created_ts:
+                    ord_sql.append(f"unix_micros({_CREATED_TS})")
+                ord_sql.extend(_bt(c) for c in part.tiebreaks)
+                best = [
+                    f"max_by(struct({', '.join(part.aliases)}), "
+                    f"struct({', '.join(ord_sql)})) AS __best"
+                ]
             acc_rest = [
-                f"a.{_bt(c)}"
+                c
                 for c in acc_cols
                 if c not in part.entity_cols and c != _ENTITY_TS
             ]
-            proj = ", ".join([keys_sql, _ENTITY_TS, *acc_rest, feats])
-            acc_sql = f"""
+            proj = ", ".join(
+                [
+                    *keys,
+                    _ENTITY_TS,
+                    *(f"a.{_bt(c)}" for c in acc_rest),
+                    *(f"latest.__best.{a} AS {a}" for a in part.aliases),
+                ]
+            )
+            acc_sql = f"""(
             SELECT {latest_hint}{proj}
             FROM {acc_sql} a
             LEFT JOIN (
-              SELECT {keys_sql}, {_ENTITY_TS}, {best}
-              FROM (
-                SELECT {ek_hint}{keys_sql}, {_ENTITY_TS},
-                       max_by({payload}, {ord_key}) AS __best
-                FROM {fview} f
-                JOIN {ekv} ek USING ({keys_sql})
-                WHERE {part.range_cond}
-                GROUP BY {keys_sql}, {_ENTITY_TS}
-              )
+              SELECT {ek_hint}{", ".join([group, *best])}
+              FROM {fview} f
+              {ek_join}
+              WHERE {part.range_cond}
+              GROUP BY {group}
             ) latest
-            USING ({keys_sql}, {_ENTITY_TS})
-            """
-            if idx + 1 < len(parts):
-                acc_sql = f"({acc_sql})"
+            USING ({group})
+            )"""
             # track the accumulated schema without a py4j round trip:
             # the USING join emits [keys, ts, acc-rest, features]
             acc_cols = (
-                list(part.entity_cols)
-                + [_ENTITY_TS]
-                + [
-                    c
-                    for c in acc_cols
-                    if c not in part.entity_cols and c != _ENTITY_TS
-                ]
-                + list(part.out_names)
+                list(part.entity_cols) + [_ENTITY_TS] + acc_rest
+                + list(part.aliases)
             )
-        return spark.sql(acc_sql)
+        # P4: drop internal columns (the reference's regex column
+        # exclusion, hive.py:706) — everything else (incl. passthrough
+        # entity columns) survives — and give features their names.
+        out = {
+            a: n for p in parts for a, n in zip(p.aliases, p.out_names)
+        }
+        final = ", ".join(
+            f"{_bt(c)} AS {_bt(out[c])}" if c in out else _bt(c)
+            for c in acc_cols
+            if c != _ENTITY_TS
+        )
+        return spark.sql(f"SELECT {final} FROM {acc_sql} r")

@@ -29,6 +29,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from feast_hive_spark.sources.tables import nanos_ts_columns
 from feast_hive_spark.types import spark_to_hive_type, spark_to_value_type, ValueType
 
 
@@ -205,28 +206,10 @@ class ParquetSource(DataSource):
         super().__init__(name=name or path, **kwargs)
         self.path = path
 
-    def _nano_ts_columns(self) -> list[str]:
-        """Columns stored as parquet TIMESTAMP(NANOS), which Spark's
-        reader rejects outright (PARQUET_TYPE_ILLEGAL). Footer-only
-        check via pyarrow — no data read."""
-        try:
-            import pyarrow.dataset as ds
-
-            schema = ds.dataset(self.path, format="parquet").schema
-        except Exception:  # noqa: BLE001 - fall through to Spark's own error
-            return []
-        import pyarrow as pa
-
-        return [
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-
     def _load(self, spark: SparkSession) -> DataFrame:
         from pyspark.sql import functions as F
 
-        nano_cols = self._nano_ts_columns()
+        nano_cols = nanos_ts_columns(self.path)
         if not nano_cols:
             return spark.read.parquet(self.path)
         # read nanos as long, rebuild at microsecond precision JVM-side

@@ -57,6 +57,39 @@ _DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _DF_CACHE_MAX = 160
 
 
+def nanos_ts_columns(path: str) -> list[str]:
+    """Columns of the parquet file or directory at ``path`` stored as
+    logical TIMESTAMP(NANOS), which Spark can only read as long.
+
+    Footer-only (pyarrow, no data read). pyarrow reports BOTH
+    INT64-backed NANOS and legacy physical INT96 columns as
+    ``timestamp[ns]``, but Spark reads INT96 natively as a timestamp
+    (it is Spark's own default write encoding), so the PHYSICAL type
+    decides. Unreadable paths report nothing and fall through to
+    Spark's own error."""
+    try:
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        dset = ds.dataset(path, format="parquet")
+        ns = [
+            f.name
+            for f in dset.schema
+            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+        ]
+        if not ns:
+            return []
+        md = next(iter(dset.get_fragments())).metadata
+        int96 = {
+            md.schema.column(i).name
+            for i in range(md.num_columns)
+            if md.schema.column(i).physical_type == "INT96"
+        }
+        return [c for c in ns if c not in int96]
+    except Exception:  # noqa: BLE001 - fall through to Spark's own error
+        return []
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table with normalized schema."""
     # Harden against caller-supplied sessions (the verify driver builds

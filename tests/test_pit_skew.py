@@ -2,11 +2,11 @@
 
 plans/pit.py argues that the max_by hash/sort aggregate collapses a
 whale entity key (one key owning half the feature table) to one row
-per map partition BEFORE the shuffle — unlike the row_number window,
-which ships every joined row of the hot key through one shuffle
-partition.  The plan audit shows partial_max_by in the plan; this
-test reads the EXECUTED plan's shuffle metrics and proves the
-collapse actually happened at runtime (the reference has no
+per map partition BEFORE the shuffle, where a plain hash shuffle
+ships every row of the hot key through one shuffle partition.  The
+plan audit shows partial_max_by in the plan; this test reads the
+EXECUTED plan's shuffle metrics and proves the collapse actually
+happened at runtime (the reference has no
 equivalent — Hive owned execution, hive.py:192-269)."""
 
 from datetime import datetime, timedelta
@@ -67,7 +67,7 @@ def test_whale_key_collapses_before_shuffle(spark, whale):
     """max_by path: no shuffle in the whole PIT plan may move O(N_FEAT)
     records — the partial aggregate must reduce the 200k joined rows
     to <= keys x map-partitions before any exchange."""
-    df, rows = _run(spark, whale, use_max_by=True)
+    df, rows = _run(spark, whale)
     assert len(rows) == N_KEYS
     recs = _shuffle_records(df)
     parts = spark.sparkContext.defaultParallelism
@@ -77,42 +77,11 @@ def test_whale_key_collapses_before_shuffle(spark, whale):
         f"a shuffle moved {max(recs)} records (bound {bound}) — "
         "map-side collapse did not happen"
     )
-
-
-def test_window_path_also_collapses_via_group_limit(spark, whale):
-    """Spark's WindowGroupLimit rewrite gives the row_number path the
-    same map-side top-1 collapse (measured: ~keys x partitions records
-    shuffled, not 200k) — so both physical strategies are skew-immune
-    on this engine version."""
-    df, rows = _run(spark, whale, use_max_by=False)
-    assert len(rows) == N_KEYS
-    recs = _shuffle_records(df)
-    parts = spark.sparkContext.defaultParallelism
-    assert max(recs) <= N_KEYS * parts * 2
-
-
-def test_disabled_group_limit_ships_the_whale(spark, whale):
-    """Negative control: with the WindowGroupLimit rewrite disabled,
-    the window path really does shuffle every joined row — proving the
-    recordsRead metric measures exactly what the collapse tests claim
-    to prevent (and why a pre-WindowGroupLimit engine must use the
-    max_by strategy at scale)."""
-    key = "spark.sql.optimizer.windowGroupLimitThreshold"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "-1")
-    try:
-        # plan_cache=False: the point is to observe a FRESH physical
-        # compilation under the toggled optimizer conf — the prepared-
-        # plan cache (correctly) returns the frozen compiled plan of
-        # the earlier identical retrieval otherwise.
-        df, rows = _run(spark, whale, use_max_by=False, plan_cache=False)
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-    assert len(rows) == N_KEYS
-    assert max(_shuffle_records(df)) >= N_FEAT
+    # negative control: a plain hash shuffle of the same frame really
+    # moves every row, so the probe measures what the bound prevents
+    plain = whale[1].select("k").repartition("k")
+    plain.collect()
+    assert max(_shuffle_records(plain)) >= N_FEAT
 
 
 def test_skewed_fixture_broadcast_smj_parity(spark, whale):

@@ -67,6 +67,36 @@ def test_parquet_source(spark, sf_dir):
     assert cols["l_quantity"] == "double"
 
 
+def test_parquet_source_reads_spark_written_int96(spark, tmp_path):
+    """Spark writes timestamps as physical INT96 by default, which
+    pyarrow reports as ``timestamp[ns]``. Only INT64-backed NANOS
+    columns need the read-as-long fallback; an INT96 column must come
+    back as a plain timestamp, and a PIT over the source must work."""
+    from datetime import datetime, timedelta
+
+    from feast_hive_spark.plans.pit import FeatureView, get_historical_features
+
+    base = datetime(2024, 1, 10, 12, 0)
+    path = str(tmp_path / "int96_feat")
+    spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "k": [1, 1],
+                "ts": [base - timedelta(hours=2), base - timedelta(hours=1)],
+                "v": [1.0, 2.0],
+            }
+        )
+    ).write.parquet(path)
+    src = ParquetSource(path, event_timestamp_column="ts")
+    df = src.to_df(spark)
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    assert sorted(r["v"] for r in df.collect()) == [1.0, 2.0]
+    fv = FeatureView(name="fv", source=src, join_keys=["k"], features=["v"])
+    entity = pd.DataFrame({"k": [1], "event_timestamp": [base]})
+    got = get_historical_features(spark, entity, [fv]).to_df()
+    assert got["v"].tolist() == [2.0]
+
+
 def test_field_mapping(spark):
     src = TableSource("events", field_mapping={"ts": "event_ts", "user_id": "driver_id"})
     df = src.to_df(spark)
